@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, VersionNotFoundError
 from jodie_spark.tables.log import DeltaLog
+from jodie_spark.tables.sqltext import quote
 from jodie_spark.tables.table import CDF_PROP, DeltaTable
 
 
@@ -195,7 +196,7 @@ def read_cdf(
     if not parts:
         return spark.createDataFrame([], out_schema)
     result = reduce(lambda a, b: a.unionByName(b), parts)
-    return result.select([f.name for f in out_schema.fields])
+    return result.select([quote(f.name) for f in out_schema.fields])
 
 
 def _join_version(

@@ -43,6 +43,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _mg_update(counts: pd.Series, vc: pd.Series, k: int) -> pd.Series:
@@ -58,6 +59,16 @@ def _mg_update(counts: pd.Series, vc: pd.Series, k: int) -> pd.Series:
         counts = counts - thresh
         counts = counts[counts > 0]
     return counts
+
+
+def _summary_schema(vals: DataFrame, *names: str) -> T.StructType:
+    """Output schema of a Misra-Gries pass: the given columns (nullable:
+    the row-count rows carry a NULL value) plus the count ``n``. A
+    StructType, not DDL text, so nested field names need no quoting."""
+    return T.StructType(
+        [T.StructField(c, vals.schema[c].dataType) for c in names]
+        + [T.StructField("n", T.LongType())]
+    )
 
 
 def _mg_candidates(k: int):
@@ -141,13 +152,12 @@ def heavy_hitters(
     vals = df.select(F.col(value_col).alias("value")).filter(
         F.col("value").isNotNull()
     )
-    dtype = vals.schema["value"].dataType.simpleString()
     # the MG pass is the expensive corpus scan and is consumed TWICE
     # below (candidates + row total, two jobs ReuseExchange cannot
     # merge) — localCheckpoint materializes its tiny output
     # (≤ partitions × (k+1) rows) on first use so the scan runs once
     mg = vals.mapInPandas(
-        _mg_candidates(k), schema=f"value {dtype}, n long"
+        _mg_candidates(k), schema=_summary_schema(vals, "value")
     ).localCheckpoint(eager=False)
     # candidates are bounded (≤ partitions × k) → broadcast; the total
     # is one row → broadcast cross join. No driver-side collect.
@@ -174,11 +184,8 @@ def _grouped_heavy_hitters(
         )
         .filter(F.col("group").isNotNull() & F.col("value").isNotNull())
     )
-    gtype = vals.schema["group"].dataType.simpleString()
-    vtype = vals.schema["value"].dataType.simpleString()
     mg = vals.mapInPandas(
-        _mg_grouped_candidates(k),
-        schema=f"group {gtype}, value {vtype}, n long",
+        _mg_grouped_candidates(k), schema=_summary_schema(vals, "group", "value")
     ).localCheckpoint(eager=False)
     # candidates/totals are LINEAR IN GROUP CARDINALITY (groups × k /
     # groups rows) — broadcast only while that fits comfortably; at

@@ -28,14 +28,6 @@ from pyspark.sql import functions as F
 from jodie_spark.operators.ivf import ivf_cell
 
 
-def _normalized(vec_col: str):
-    v = F.col(vec_col).cast("array<double>")
-    norm = F.greatest(
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)), F.lit(1e-12)
-    )
-    return F.transform(v, lambda x: x / norm)
-
-
 def kmeans_fit(
     df: DataFrame,
     vec_col: str,

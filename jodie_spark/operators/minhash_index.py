@@ -98,8 +98,9 @@ def build_minhash_index(
     shingle_size: int = 5,
     mode: str = "error",
 ) -> None:
-    """One pass over the corpus → postings (partitioned by band) +
-    signatures, geometry persisted as table properties."""
+    """One pass over the corpus → band postings (one table, not
+    partitioned by band) + signatures, geometry persisted as table
+    properties."""
     if num_hashes % bands:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     from jodie_spark.tables.table import write_delta

@@ -184,16 +184,6 @@ def minhash_signature_from_word_hashes(
     return sig(word_hash_col)
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: each shingle string is xxhash64'd once, then
-    re-hashed affinely per permutation. Convenience single-expression
-    form; hot paths should materialize ``transform(sh, xxhash64)`` as a
-    column and use :func:`minhash_signature_from_hashes`."""
-    return minhash_signature_from_hashes(
-        F.transform(shingle_col, lambda s: F.xxhash64(s)), num_hashes
-    )
-
-
 def _banded(sig_col: str, num_hashes: int, bands: int) -> Column:
     """Array of (band_id, band_hash) structs; docs agreeing on any full
     band become bucket-mates (LSH banding). Takes the signature COLUMN

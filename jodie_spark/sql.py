@@ -549,6 +549,8 @@ def _show_create_table(t) -> str:
     NOT NULL, identity/generation clauses, CURRENT_DEFAULT), USING
     DELTA, PARTITIONED BY / CLUSTER BY, TBLPROPERTIES, LOCATION."""
     from jodie_spark.tables.identity import identity_columns_of
+    from jodie_spark.tables.sqltext import ddl
+    from jodie_spark.tables.sqltext import quote as bq
     from jodie_spark.tables.table import column_defaults_of, generated_columns_of
 
     snap = t.snapshot()
@@ -557,21 +559,15 @@ def _show_create_table(t) -> str:
     generated = generated_columns_of(schema)
     defaults = column_defaults_of(schema)
 
-    def bq(name: str) -> str:
-        # backtick-quoted identifier: ` escapes as `` (Spark parser
-        # rule), so a column literally named a`b emits `a``b` and the
-        # DDL stays runnable — same treatment TBLPROPERTIES values get
-        return "`" + str(name).replace("`", "``") + "`"
-
     def sq(s: str) -> str:
         return str(s).replace("'", "''")  # SQL-standard '' escaping
 
     col_lines = []
     for f in schema.fields:
-        # simpleString verbatim — uppercasing would rename NESTED
-        # struct/map field names; identifiers are backtick-quoted so
-        # names with spaces/dashes stay runnable
-        line = f"  {bq(f.name)} {f.dataType.simpleString()}"
+        # identifiers are backtick-quoted (` doubles), nested struct
+        # field names too, so names with spaces/dashes/backticks stay
+        # runnable; never uppercased, which would rename nested fields
+        line = f"  {bq(f.name)} {ddl(f.dataType)}"
         if f.name in identities:
             spec = identities[f.name]
             kind = "ALWAYS" if not spec.get("allow_explicit") else "BY DEFAULT"

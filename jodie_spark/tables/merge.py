@@ -23,6 +23,10 @@ set; pass 2 reads only files that actually change. Both joins are
 planned by Catalyst (broadcast when the source is small, AQE otherwise).
 All row counts come from a single ``Observation`` on the rewrite pass —
 no extra count jobs.
+
+Every output column, on this path, the deletion-vector path
+(``_execute_mor``) and the insert-only path (``_execute_insert_only``),
+is one SQL CASE expression built by ``_render_outputs``.
 """
 
 from __future__ import annotations
@@ -38,17 +42,11 @@ from pyspark.sql import functions as F
 
 from jodie_spark.errors import JodieValidationError
 from jodie_spark.tables.pruning import split_conjuncts, _referenced_names
+from jodie_spark.tables.sqltext import ddl, quote
 from jodie_spark.tables.writer import write_data_files
 
 if TYPE_CHECKING:
     from jodie_spark.tables.table import DeltaTable
-
-
-def _qcol(talias: str, name: str) -> Column:
-    """Alias-qualified column reference with the name backtick-quoted —
-    F.col() PARSES its argument, so a raw backtick in a field name is a
-    syntax error without escaping."""
-    return F.col(f"{talias}.`{name.replace('`', '``')}`")
 
 
 def _align_by_name(col: Column, src_type, dst_type) -> Column:
@@ -237,6 +235,18 @@ def _strip_alias_prefix(conj: str, talias: str) -> str:
     return "".join(
         p if p.startswith("'") else pat.sub("", p) for p in parts
     )
+
+
+def _idx_sql(clauses: list["_Clause"], base: str) -> str:
+    """Index of the first clause whose condition holds (CASE evaluates
+    in clause order), -1 if none. Every user fragment ends with a
+    newline so a trailing ``-- comment`` cannot swallow the text after
+    it."""
+    whens = "".join(
+        f" WHEN ({base}) AND ({cl.condition or 'TRUE'}\n) THEN {k}"
+        for k, cl in enumerate(clauses)
+    )
+    return f"CASE{whens} ELSE -1 END" if whens else "-1"
 
 
 @dataclass
@@ -462,41 +472,14 @@ class DeltaMergeBuilder:
             tgt = read_files_df(spark, t.path, schema, []).alias(talias)
         anti = src.join(tgt, F.expr(self.condition), "left_anti")
 
-        def _clause_cond(cl: _Clause) -> Column:
-            return F.expr(cl.condition) if cl.condition else F.lit(True)
-
-        i_idx: Column = F.lit(-1)
-        for k in range(len(self._not_matched) - 1, -1, -1):
-            i_idx = F.when(_clause_cond(self._not_matched[k]), F.lit(k)).otherwise(i_idx)
-        staged = anti.withColumn("__i_idx__", i_idx).filter(F.col("__i_idx__") >= 0)
+        staged = anti.withColumn(
+            "__i_idx__", F.expr(_idx_sql(self._not_matched, "TRUE"))
+        ).filter("__i_idx__ >= 0")
 
         obs = Observation()
         staged = staged.observe(obs, F.count(F.lit(1)).alias("inserted"))
-
-        src_fields = {f.name: f for f in self.source.schema.fields}
-
-        def _ins_col(fld) -> Column:
-            expr: Column = F.lit(None).cast(fld.dataType)
-            for k in range(len(self._not_matched) - 1, -1, -1):
-                cl = self._not_matched[k]
-                if cl.star:
-                    sf = src_fields.get(fld.name)
-                    val = (
-                        _align_by_name(self.source[fld.name], sf.dataType, fld.dataType)
-                        if sf is not None
-                        else F.lit(None).cast(fld.dataType)
-                    )
-                elif fld.name in cl.assignments:
-                    v = cl.assignments[fld.name]
-                    val = (v if isinstance(v, Column) else F.expr(str(v))).cast(
-                        fld.dataType
-                    )
-                else:
-                    val = F.lit(None).cast(fld.dataType)
-                expr = F.when(F.col("__i_idx__") == k, val).otherwise(expr)
-            return expr.cast(fld.dataType).alias(fld.name)
-
-        result = staged.select(*[_ins_col(f) for f in schema.fields])
+        valued, out = self._render_outputs(staged, schema, None)
+        result = valued.select(*out)
 
         id_schema_meta = None
         if id_generate:
@@ -552,9 +535,9 @@ class DeltaMergeBuilder:
                 logical_schema=schema if schema_evolved else None,
             )
             if t.is_cdf_enabled(snap):
-                change_df = staged.select(
-                    *[_ins_col(f) for f in schema.fields]
-                ).withColumn("_change_type", F.lit("insert"))
+                change_df = valued.select(*out).withColumn(
+                    "_change_type", F.lit("insert")
+                )
                 cdc_actions = t._write_cdf_files(
                     change_df, snap,
                     logical_schema=schema if schema_evolved else None,
@@ -680,14 +663,6 @@ class DeltaMergeBuilder:
         is_t = "__t_exists__ IS NOT NULL"
         is_s = "__s_exists__ IS NOT NULL"
 
-        def _idx_sql(clauses: list[_Clause], base: str) -> str:
-            # first matching clause wins: CASE evaluates in clause order
-            whens = "".join(
-                f" WHEN ({base}) AND ({cl.condition or 'TRUE'}) THEN {k}"
-                for k, cl in enumerate(clauses)
-            )
-            return f"CASE{whens} ELSE -1 END" if whens else "-1"
-
         m_sql = _idx_sql(self._matched, f"({is_t}) AND ({is_s})")
         i_sql = _idx_sql(self._not_matched, f"({is_s}) AND NOT ({is_t})")
         b_sql = _idx_sql(self._not_matched_by_source, f"({is_t}) AND NOT ({is_s})")
@@ -727,152 +702,67 @@ class DeltaMergeBuilder:
             }
         ).withColumn("__action__", F.expr(action_sql))
 
-    def _out_col_factory(self, talias: str):
-        """Column builder applying the first matching clause's
-        assignments (clause-order semantics) to one output field.
+    def _render_outputs(
+        self, staged: DataFrame, schema, talias: str | None
+    ) -> tuple[DataFrame, list[Column]]:
+        """The merge output columns, each ONE ``F.expr`` of CASE text
+        applying the first matching clause's assignment (clause-order
+        semantics via the ``__m_idx__``/``__b_idx__``/``__i_idx__``
+        indexes of ``_stage_actions``; each index is >= 0 only on rows
+        of its kind, so the WHEN branches never collide). Text, not
+        Column chains: every Column node costs a py4j round trip, paid
+        per micro-batch on the streaming sinks.
 
-        Per-clause branch conditions are built ONCE here and shared by
-        every output field: each Column node costs a py4j round trip,
-        and rebuilding `action == 'update' AND __m_idx__ == k` per field
-        multiplied that driver latency by the column count — paid per
-        micro-batch on the streaming merge sinks."""
+        Values that are not SQL text — user ``Column`` assignments and
+        star values, which align structs by field name against the
+        source — are attached to ``staged`` with one ``withColumns``
+        under private names, each referenced once in the CASE text.
+        CollapseProject inlines each into its branch, so a value is
+        still only evaluated for rows that take that branch.
+
+        ``talias=None`` renders the insert-only shape: no target side,
+        unassigned columns are NULL. Returns the frame to select from
+        and the output columns."""
         src_fields = {f.name: f for f in self.source.schema.fields}
-        # per-clause branch conditions for the Column fallback path,
-        # built lazily (the SQL fast path never needs them) and cached
-        # so every fallback field shares the same Column objects
-        _cond_cache: dict[tuple[str, int], Column] = {}
-
-        def _cond(kind: str, k: int) -> Column:
-            key = (kind, k)
-            c = _cond_cache.get(key)
-            if c is None:
-                if kind == "m":
-                    c = F.expr(f"__action__ = 'update' AND __m_idx__ = {k}")
-                elif kind == "bs":
-                    c = F.expr(
-                        "__action__ = 'update' AND __m_idx__ = -1"
-                        f" AND __b_idx__ = {k}"
-                    )
-                else:
-                    c = F.expr(f"__action__ = 'insert' AND __i_idx__ = {k}")
-                _cond_cache[key] = c
-            return c
-
-        def _assignment(cl: _Clause, name: str, dtype) -> Column:
-            if cl.star:
-                # updateAll/insertAll expand over the SOURCE columns
-                # (delta-spark star semantics): a target column absent
-                # from the source keeps its target value on update and
-                # inserts NULL — the shape a schema-evolution merge
-                # relies on, and what Delta's UPDATE/INSERT * expansion
-                # does even without evolution.
-                sf = src_fields.get(name)
-                if sf is None:
-                    if cl.kind == "update":
-                        return _qcol(talias, name)
-                    return F.lit(None).cast(dtype)
-                # structs align by FIELD NAME, recursively — a source
-                # struct with reordered or missing nested fields must
-                # not be squeezed through Spark's positional struct cast
-                return _align_by_name(self.source[name], sf.dataType, dtype)
-            if name in cl.assignments:
-                v = cl.assignments[name]
-                col = v if isinstance(v, Column) else F.expr(str(v))
-                return col.cast(dtype)
-            if cl.kind == "update":
-                return _qcol(talias, name)
-            return F.lit(None).cast(dtype)  # insert: unassigned columns → NULL
-
-        def _sql_assignment(cl: _Clause, name: str, ddl: str) -> str | None:
-            """SQL-text equivalent of ``_assignment`` when the clause is
-            expressible as text; None forces the Column fallback (star
-            clauses need by-name struct alignment against the source
-            DataFrame, and Column-object assignments cannot stringify)."""
-            if cl.star:
-                return None
-            q = f"`{name.replace('`', '``')}`"
-            if name in cl.assignments:
-                v = cl.assignments[name]
-                if isinstance(v, Column):
-                    return None
-                return f"CAST(({v}) AS {ddl})"
-            if cl.kind == "update":
-                return f"{talias}.{q}"
-            return f"CAST(NULL AS {ddl})"  # insert: unassigned columns → NULL
-
-        def _out_col(fld) -> Column:
-            # fast path: one CASE expression as SQL text — the nested
-            # F.when chain cost ~10 py4j round trips per clause per
-            # field; the text form is 3 per field. Same clause-order
-            # semantics: the branch conditions are mutually exclusive
-            # (__m_idx__/__i_idx__/__b_idx__ pin the clause), so WHEN
-            # order is free.
-            ddl = fld.dataType.simpleString()
-            branches: list[str] | None = []
-            for k, cl in enumerate(self._matched):
-                if cl.kind == "update":
-                    a = _sql_assignment(cl, fld.name, ddl)
-                    if a is None:
-                        branches = None
-                        break
-                    branches.append(
-                        f"WHEN __action__ = 'update' AND __m_idx__ = {k} THEN {a}"
-                    )
-            if branches is not None:
-                for k, cl in enumerate(self._not_matched_by_source):
-                    # by-source rows have __m_idx__ == -1, so these
-                    # branches never collide with the matched-update
-                    # ones; assignments reference target columns only
-                    if cl.kind == "update":
-                        a = _sql_assignment(cl, fld.name, ddl)
-                        if a is None:
-                            branches = None
-                            break
-                        branches.append(
-                            "WHEN __action__ = 'update' AND __m_idx__ = -1"
-                            f" AND __b_idx__ = {k} THEN {a}"
+        values: dict[str, Column] = {}
+        groups = (
+            ("__m_idx__", self._matched),
+            ("__b_idx__", self._not_matched_by_source),
+            ("__i_idx__", self._not_matched),
+        )
+        cols = []
+        for j, fld in enumerate(schema.fields):
+            q = quote(fld.name)
+            typ = ddl(fld.dataType)
+            null = f"CAST(NULL AS {typ})"
+            base = f"{talias}.{q}" if talias else null
+            whens = []
+            for idx, clauses in groups:
+                for k, cl in enumerate(clauses):
+                    if cl.kind == "delete":
+                        continue
+                    # unassigned: updates keep the target value, inserts
+                    # get NULL; star clauses expand over the SOURCE
+                    # columns (delta-spark star semantics), so a target
+                    # column the source lacks is unassigned too
+                    val = base if cl.kind == "update" else null
+                    private = f"{idx[:4]}{k}_{j}__"
+                    if cl.star and fld.name in src_fields:
+                        values[private] = _align_by_name(
+                            self.source[q], src_fields[fld.name].dataType, fld.dataType
                         )
-            if branches is not None:
-                for k, cl in enumerate(self._not_matched):
-                    a = _sql_assignment(cl, fld.name, ddl)
-                    if a is None:
-                        branches = None
-                        break
-                    branches.append(
-                        f"WHEN __action__ = 'insert' AND __i_idx__ = {k} THEN {a}"
-                    )
-            if branches is not None:
-                q = f"`{fld.name.replace('`', '``')}`"
-                base = f"{talias}.{q}"
-                sql = (
-                    f"CASE {' '.join(branches)} ELSE {base} END"
-                    if branches
-                    else base
-                )
-                return F.expr(sql).cast(fld.dataType).alias(fld.name)
-
-            expr: Column = _qcol(talias, fld.name)
-            for k, cl in enumerate(self._matched):
-                if cl.kind == "update":
-                    expr = F.when(
-                        _cond('m', k), _assignment(cl, fld.name, fld.dataType)
-                    ).otherwise(expr)
-            for k, cl in enumerate(self._not_matched_by_source):
-                # by-source rows have __m_idx__ == -1, so these whens
-                # never collide with the matched-update ones above;
-                # assignments reference target columns only (no source
-                # row exists) and unassigned columns keep target values
-                if cl.kind == "update":
-                    expr = F.when(
-                        _cond('bs', k), _assignment(cl, fld.name, fld.dataType)
-                    ).otherwise(expr)
-            for k, cl in enumerate(self._not_matched):
-                expr = F.when(
-                    _cond('i', k), _assignment(cl, fld.name, fld.dataType)
-                ).otherwise(expr)
-            return expr.cast(fld.dataType).alias(fld.name)
-
-        return _out_col
+                        val = private
+                    elif not cl.star and fld.name in cl.assignments:
+                        v = cl.assignments[fld.name]
+                        if isinstance(v, Column):
+                            values[private] = v
+                            v = private
+                        val = f"CAST(({v}\n) AS {typ})"
+                    if val != base:
+                        whens.append(f"WHEN {idx} = {k} THEN {val}")
+            body = f"CASE {' '.join(whens)} ELSE {base} END" if whens else base
+            cols.append(F.expr(f"{body} AS {q}"))
+        return (staged.withColumns(values) if values else staged), cols
 
     def _execute_mor(self, allow_multiple_matches: bool, t0: float) -> None:
         """Merge-on-read MERGE: matched update/delete rows are marked in
@@ -990,7 +880,6 @@ class DeltaMergeBuilder:
             ).select("__fp__", "__ri__").distinct()
             rows = t._write_dvs_for(dv_marks, candidates) if candidates else []
 
-            _out_col = self._out_col_factory(talias)
             # row tracking: updated rows keep their id, inserts get
             # fresh ids (NULL materialized value + fresh baseRowId);
             # every emitted row carries this commit's version (NULL
@@ -1005,9 +894,10 @@ class DeltaMergeBuilder:
                     F.lit(None).cast("long").alias(lineage[1]),
                 ]
                 stat_exclude = set(lineage)
-            emitted = staged.filter(
-                F.col("__action__").isin("update", "insert")
-            ).select(*[_out_col(f) for f in schema.fields], *lineage_out)
+            valued, out = self._render_outputs(staged, schema, talias)
+            emitted = valued.filter("__action__ IN ('update', 'insert')").select(
+                *out, *lineage_out
+            )
             adds = write_data_files(
                 enforce_check_constraints(
                     apply_generated_columns(emitted, schema), snap.configuration
@@ -1319,10 +1209,9 @@ class DeltaMergeBuilder:
                 # anti join against the source, filtered by the OR of
                 # the clause conditions; shuffles (row, path) of the
                 # probe only, like the semi join above
-                bs_cond = None
-                for cl in self._not_matched_by_source:
-                    c = F.expr(cl.condition) if cl.condition else F.lit(True)
-                    bs_cond = c if bs_cond is None else (bs_cond | c)
+                bs_cond = " OR ".join(
+                    f"({cl.condition or 'TRUE'}\n)" for cl in self._not_matched_by_source
+                )
                 raw_touched |= {
                     r[0]
                     for r in probe.alias(talias)
@@ -1385,7 +1274,6 @@ class DeltaMergeBuilder:
             staged = staged.persist()
             staged_cached = True
 
-        _out_col = self._out_col_factory(talias)
         # row tracking: copied+updated rows keep their id (insert rows
         # joined from the source side carry NULL → fresh ids via the
         # add's baseRowId); only copied rows keep their commit version
@@ -1394,13 +1282,12 @@ class DeltaMergeBuilder:
             from jodie_spark.tables.row_lineage import LIN_RCV, LIN_RID
 
             lineage_out = [
-                F.col(LIN_RID).alias(LIN_RID),
-                F.when(F.col("__action__") == "copy", F.col(LIN_RCV))
-                .otherwise(F.lit(None).cast("long"))
-                .alias(LIN_RCV),
+                F.col(LIN_RID),
+                F.expr(f"CASE WHEN __action__ = 'copy' THEN {LIN_RCV} END AS {LIN_RCV}"),
             ]
-        result = staged.filter(F.col("__action__").isin("update", "copy", "insert")).select(
-            *[_out_col(f) for f in schema.fields], *lineage_out
+        valued, out = self._render_outputs(staged, schema, talias)
+        result = valued.filter("__action__ IN ('update', 'copy', 'insert')").select(
+            *out, *lineage_out
         )
 
         # in-merge identity generation: insert-output rows land with a
@@ -1468,21 +1355,21 @@ class DeltaMergeBuilder:
                 # post-images the merge output columns — same shapes
                 # Delta's MergeIntoCommand records
                 pre_cols = [
-                    F.col(f"{talias}.{f.name}").cast(f.dataType).alias(f.name)
+                    F.expr(f"CAST({talias}.{q} AS {ddl(f.dataType)}) AS {q}")
                     for f in schema.fields
+                    for q in [quote(f.name)]
                 ]
-                out_cols = [_out_col(f) for f in schema.fields]
                 deletes = staged.filter(F.col("__action__") == "delete").select(
                     *pre_cols
                 ).withColumn("_change_type", F.lit("delete"))
                 upd_pre = staged.filter(F.col("__action__") == "update").select(
                     *pre_cols
                 ).withColumn("_change_type", F.lit("update_preimage"))
-                upd_post = staged.filter(F.col("__action__") == "update").select(
-                    *out_cols
+                upd_post = valued.filter(F.col("__action__") == "update").select(
+                    *out
                 ).withColumn("_change_type", F.lit("update_postimage"))
-                inserts = staged.filter(F.col("__action__") == "insert").select(
-                    *out_cols
+                inserts = valued.filter(F.col("__action__") == "insert").select(
+                    *out
                 ).withColumn("_change_type", F.lit("insert"))
                 change_df = deletes.unionByName(upd_pre).unionByName(upd_post).unionByName(inserts)
                 cdc_actions = t._write_cdf_files(

@@ -244,10 +244,6 @@ class _Ctx:
         return file_may_match(add, [cj], self.schema, self.partition_columns)
 
 
-def _all_true(ctx: _Ctx) -> None:
-    return None  # sentinel: caller treats None as all-true
-
-
 def _partition_leaf(cj: Conjunct, ctx: _Ctx) -> "pa.Array":
     """Exact Python semantics at O(#distinct): dictionary-encode the
     partition-value strings and call ``file_may_match`` once per unique

@@ -13,7 +13,6 @@ this shape back out of the log.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import math
 from typing import Any
 
@@ -171,6 +170,3 @@ def _lt(a: Any, b: Any) -> bool:
     except TypeError:
         return str(a) < str(b)
 
-
-def stats_json(file_path: str) -> str:
-    return json.dumps(collect_file_stats(file_path), separators=(",", ":"))

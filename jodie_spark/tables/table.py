@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from jodie_spark.errors import DeltaProtocolError, JodieValidationError
 from jodie_spark.tables.log import CHECKPOINT_PROTECTION_PROP, DeltaLog, Snapshot
+from jodie_spark.tables.sqltext import quote
 from jodie_spark.tables.writer import write_data_files, write_metrics
 
 CDF_PROP = "delta.enableChangeDataFeed"
@@ -124,7 +125,7 @@ def enforce_nullability(df: DataFrame, schema: T.StructType) -> DataFrame:
             continue
         df = df.filter(
             F.assert_true(
-                F.col(f.name).isNotNull(),
+                F.col(quote(f.name)).isNotNull(),
                 F.lit(f"NOT NULL constraint violated for column: {f.name}"),
             ).isNull()
         )
@@ -179,9 +180,7 @@ def _schema_order_select(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project to the schema's columns in schema order via ONE
     selectExpr — per-field F.col() Columns cost 3x the py4j round
     trips, paid on every candidate/rewrite scan."""
-    return df.selectExpr(
-        *[f"`{f.name.replace('`', '``')}`" for f in schema.fields]
-    )
+    return df.selectExpr(*[quote(f.name) for f in schema.fields])
 
 def read_files_df(
     spark: SparkSession,
@@ -374,7 +373,7 @@ def _read_dv_files_df(
         .schema(schema)
         .load(paths)
         .select(
-            *[F.col(f.name) for f in schema.fields],
+            *[F.col(quote(f.name)) for f in schema.fields],
             F.col("_metadata.file_path").alias("__fp__"),
             F.col("_metadata.row_index").alias("__ri__"),
         )
@@ -3273,16 +3272,6 @@ def maybe_auto_compact(
         return False
 
 
-def filter_by_paths(df: DataFrame, path_col: str, paths: set[str]) -> DataFrame:
-    """Keep rows whose ``path_col`` is in ``paths``. Small sets inline as
-    an IN list; large sets become a broadcast semi-join so the predicate
-    doesn't explode the plan at 10^5+ touched files."""
-    if len(paths) <= 1000:
-        return df.filter(F.col(path_col).isin(list(paths)))
-    names = df.sparkSession.createDataFrame([(p,) for p in paths], f"{path_col} string")
-    return df.join(F.broadcast(names), path_col, "left_semi")
-
-
 def map_touched_paths(
     table_path: str,
     candidates: list[dict[str, Any]],
@@ -3310,14 +3299,6 @@ def map_touched_paths(
             f"to log add entries: {sorted(unmapped)[:3]}"
         )
     return [by_abs[p] for p in sorted(normalized)]
-
-
-def _strip_scheme(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return urllib.parse.unquote(p)
 
 
 # ---------------------------------------------------------------------------

@@ -40,19 +40,19 @@ def test_banded_escapes_backticked_column_names(spark):
 def test_merge_sql_fastpath_handles_backticked_names_and_column_assignments(
     spark, tmpdir_path
 ):
-    """The _out_col SQL-text fast path must backtick-quote column
-    names that are not plain identifiers (here: a name with a space)
-    and fall back to the Column path for Column-object assignments —
-    both paths must land in one consistent merge result. (Backticks
-    INSIDE names are rejected upstream by write_delta's nullability
-    scan — an engine-wide pre-existing limit, not a merge path.)"""
+    """Merge output columns are rendered as SQL text, so column names
+    that are not plain identifiers (a space, a backtick) must be
+    backtick-quoted, and Column-object assignments must land in the
+    same result as string assignments."""
     import os
 
     from pyspark.sql import functions as F
 
     path = os.path.join(tmpdir_path, "mt")
     write_delta(
-        spark.range(6).selectExpr("id as k", "id * 10 as `va l`", "'x' as s"),
+        spark.range(6).selectExpr(
+            "id as k", "id * 10 as `va l`", "'x' as s", "id as `b``t`"
+        ),
         path,
     )
     t = DeltaTable.forPath(spark, path)
@@ -60,28 +60,33 @@ def test_merge_sql_fastpath_handles_backticked_names_and_column_assignments(
     (
         t.alias("t")
         .merge(src.alias("s"), "t.k = s.k")
-        # string assignment (SQL fast path) on the backticked column,
-        # Column assignment (fallback path) on the plain column
+        # string assignments on the space and backtick columns, a
+        # Column assignment on the plain column
         .whenMatchedUpdate(
-            None, {"va l": "s.nv", "s": F.concat(F.lit("u"), F.col("s.k"))}
+            None,
+            {
+                "va l": "s.nv",
+                "s": F.concat(F.lit("u"), F.col("s.k")),
+                "b`t": "t.`b``t` + 1",
+            },
         )
         .whenNotMatchedInsert(
-            values={"k": "s.k", "va l": "s.nv - 1", "s": "'new'"}
+            values={"k": "s.k", "va l": "s.nv - 1", "s": "'new'", "b`t": "-s.k"}
         )
         .execute()
     )
     got = {
-        r["k"]: (r["va l"], r["s"])
+        r["k"]: (r["va l"], r["s"], r["b`t"])
         for r in t.toDF().collect()
     }
     assert got == {
-        0: (0, "x"),
-        1: (10, "x"),
-        2: (20, "x"),
-        3: (30, "x"),
-        4: (400, "u4"),
-        5: (500, "u5"),
-        6: (599, "new"),
-        7: (699, "new"),
-        8: (799, "new"),
+        0: (0, "x", 0),
+        1: (10, "x", 1),
+        2: (20, "x", 2),
+        3: (30, "x", 3),
+        4: (400, "u4", 5),
+        5: (500, "u5", 6),
+        6: (599, "new", -6),
+        7: (699, "new", -7),
+        8: (799, "new", -8),
     }

@@ -753,7 +753,7 @@ def test_show_create_table_preserves_nested_and_quoted(spark, tmpdir_path):
     )
     write_delta(df, p, options={"team.note": "it's here"})
     stmt = sql(spark, f"SHOW CREATE TABLE delta.`{p}`").collect()[0][0]
-    assert "struct<myName:string>" in stmt  # nested name NOT uppercased
+    assert "struct<`myName`:string>" in stmt  # nested name NOT uppercased
     assert "`id`" in stmt and "`s`" in stmt
     assert "'team.note' = 'it''s here'" in stmt
     # the emitted DDL round-trips, quotes unescaped on the way back in
@@ -762,6 +762,40 @@ def test_show_create_table_preserves_nested_and_quoted(spark, tmpdir_path):
     t2 = DeltaTable.forPath(spark, p2)
     assert t2.schema()["s"].dataType["myName"].name == "myName"
     assert t2.snapshot().configuration.get("team.note") == "it's here"
+
+
+def test_show_create_table_quotes_nested_field_names(spark, tmpdir_path):
+    """Nested struct field names with a space, dash, colon or backtick
+    are backtick-quoted in the column types, so the emitted DDL parses
+    back into the same schema."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from jodie_spark import sql
+    from jodie_spark.tables.table import DeltaTable, write_delta
+
+    inner = T.StructType(
+        [
+            T.StructField(n, T.LongType())
+            for n in ("va l", "a-b", "x:y", "b`t")
+        ]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("st", inner),
+            T.StructField("arr", T.ArrayType(inner)),
+            T.StructField("m", T.MapType(T.StringType(), inner)),
+        ]
+    )
+    p = os.path.join(tmpdir_path, "sctn")
+    write_delta(spark.createDataFrame([], schema), p)
+    stmt = sql(spark, f"SHOW CREATE TABLE delta.`{p}`").collect()[0][0]
+    assert "struct<`va l`:bigint,`a-b`:bigint,`x:y`:bigint,`b``t`:bigint>" in stmt
+    p2 = os.path.join(tmpdir_path, "sctn2")
+    sql(spark, stmt.replace(os.path.abspath(p), p2))
+    assert DeltaTable.forPath(spark, p2).schema() == schema
 
 
 def test_create_or_replace_table(spark, tmpdir_path):
